@@ -870,6 +870,32 @@ def embedding_dup_pairs(
     )
 
 
+def _pair_cos6(m_a: np.ndarray, m_b: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of two float64 matrices (einsum dot over the
+    einsum/sqrt norms; a zero norm scores 0.0), rounded HALF_UP away
+    from zero to 6 dp — sign-aware, so negative cosines round like
+    Spark's ``F.round``, not toward +inf."""
+    dots = np.einsum("ij,ij->i", m_a, m_b)
+    den = np.sqrt(np.einsum("ij,ij->i", m_a, m_a)) * np.sqrt(np.einsum("ij,ij->i", m_b, m_b))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        out = np.where(den == 0, 0.0, dots / den)
+    return np.sign(out) * np.floor(np.abs(out) * 1e6 + 0.5) / 1e6
+
+
+def _triu_chunks(n: int, step: int):
+    """Yield ``np.triu_indices(n, 1)``'s (row, col) pairs in the same
+    row-major order, ``step`` pairs at a time, without materializing
+    the O(n^2) index arrays: row i owns pairs (i, i+1..n-1), so a
+    searchsorted of each global pair offset over the per-row start
+    offsets recovers its row. Peak index memory is O(n + step)."""
+    total = n * (n - 1) // 2
+    row_starts = np.concatenate(([0], np.cumsum(np.arange(n - 1, 0, -1, dtype=np.int64))[:-1]))
+    for s in range(0, total, step):
+        p = np.arange(s, min(s + step, total), dtype=np.int64)
+        qs = np.searchsorted(row_starts, p, side="right") - 1
+        yield qs, p - row_starts[qs] + qs + 1
+
+
 def _verify_pairs_cosine(
     cand: DataFrame,
     df: DataFrame,
@@ -909,17 +935,12 @@ def _verify_pairs_cosine(
     def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
         if len(va) == 0:
             return pd.Series([], dtype="float64")
-        m_a = np.vstack(va.to_numpy()).astype(np.float64)
-        m_b = np.vstack(vb.to_numpy()).astype(np.float64)
-        dots = np.einsum("ij,ij->i", m_a, m_b)
-        den = np.sqrt(np.einsum("ij,ij->i", m_a, m_a)) * np.sqrt(
-            np.einsum("ij,ij->i", m_b, m_b)
+        return pd.Series(
+            _pair_cos6(
+                np.vstack(va.to_numpy()).astype(np.float64),
+                np.vstack(vb.to_numpy()).astype(np.float64),
+            )
         )
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = np.where(den == 0, 0.0, dots / den)
-        # HALF_UP-away-from-zero to 6 dp (sign-aware so negative
-        # cosines round like Spark's F.round, not toward +inf)
-        return pd.Series(np.sign(out) * np.floor(np.abs(out) * 1e6 + 0.5) / 1e6)
 
     scored = (
         cand.join(a, "id_a")
@@ -1125,11 +1146,10 @@ def embedding_dup_pairs_ivf(
     # (and the hierarchical fit's applyInPandas documents the identical
     # caveat for degenerate corpora).
     #
-    # Bit-parity with the old _verify_pairs_cosine: the kernel expands
-    # the pair index lists and evaluates the SAME einsum/np.sqrt/
-    # sign-aware HALF_UP chain on the same float64 values, so every cos
-    # is identical and multi-cell duplicates agree exactly — the
-    # dropDuplicates keeps one copy.
+    # Bit-parity with _verify_pairs_cosine: the kernel expands the pair
+    # index lists and scores them with the same _pair_cos6 on the same
+    # float64 values, so every cos is identical and multi-cell
+    # duplicates agree exactly — the dropDuplicates keeps one copy.
     # NB (r13 optimization round): spreading df before the assignment
     # UDF was tried and reverted — ~0.2s of per-task Arrow round-trip
     # for tiny batches on a small vector table; the groupBy("_cid")
@@ -1154,8 +1174,8 @@ def embedding_dup_pairs_ivf(
         # chunk the pair-expanded einsum: a hot cell's half-matrix can
         # be millions of pairs, and expanding m[qi]/m[ci] all at once
         # allocates pairs x dim x 8 B x 2 of temporaries (GBs). The
-        # per-pair einsum chain itself is untouched, so every cos bit
-        # matches the unchunked form regardless of step. Step sizing:
+        # per-pair chain is row-local, so every cos bit matches the
+        # unchunked form regardless of step. Step sizing:
         # 2^13 pairs keeps each fancy-index temporary at 4 MB, UNDER
         # the allocator's mmap threshold, so chunk buffers are reused
         # from the arena; the original 2^18 (134 MB per side) made
@@ -1166,33 +1186,9 @@ def embedding_dup_pairs_ivf(
         # extra per-chunk numpy-call overhead is noise: ~5 einsum calls
         # per 4 MB of flops.
         #
-        # Each chunk's (qs, cs) pair indices are generated ARITHMETICALLY
-        # from the chunk's global pair offsets (r14, VERDICT r13 item 6):
-        # the old np.triu_indices(n, 1) pre-materialized BOTH full
-        # O(n^2/2) int64 index arrays before the first chunk ran — a
-        # 100k-vector hot cell would allocate ~80 GB of indices the
-        # chunking could not bound. Row i (ascending) owns pairs
-        # (i, i+1..n-1) in row-major order — exactly triu's enumeration —
-        # so a searchsorted over the n-1 per-row start offsets recovers
-        # identical (qs, cs) per chunk; peak index memory is now
-        # O(n + step) instead of O(n^2).
-        total = n * (n - 1) // 2
-        row_counts = np.arange(n - 1, 0, -1, dtype=np.int64)
-        row_starts = np.concatenate(([0], np.cumsum(row_counts)[:-1]))
         outs = []
-        step = 1 << 13
-        for s in range(0, total, step):
-            p = np.arange(s, min(s + step, total), dtype=np.int64)
-            qs = np.searchsorted(row_starts, p, side="right") - 1
-            cs = p - row_starts[qs] + qs + 1
-            m_a, m_b = m[qs], m[cs]
-            dots = np.einsum("ij,ij->i", m_a, m_b)
-            den = np.sqrt(np.einsum("ij,ij->i", m_a, m_a)) * np.sqrt(
-                np.einsum("ij,ij->i", m_b, m_b)
-            )
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out = np.where(den == 0, 0.0, dots / den)
-            cos = np.sign(out) * np.floor(np.abs(out) * 1e6 + 0.5) / 1e6
+        for qs, cs in _triu_chunks(n, 1 << 13):
+            cos = _pair_cos6(m[qs], m[cs])
             keep = cos >= threshold
             outs.append(
                 pd.DataFrame(

@@ -1,7 +1,5 @@
 """Approximate-nearest-neighbor similarity search (north-star).
 
-Two tiers:
-
 - :func:`brute_force_topk` — exact cosine top-k, the correctness
   baseline. Broadcast the (small) query set against the (huge) corpus:
   one broadcast-nested-loop with no corpus shuffle; per-corpus-partition
@@ -9,14 +7,24 @@ Two tiers:
 - :func:`lsh_ann_topk` — random-hyperplane LSH bucketing: corpus is
   pre-bucketed once (write-amortized at scale), queries probe matching
   buckets only, so cost ~ bucket size, not corpus size.
-- :func:`ivf_topk` — inverted-file variant: corpus assigned to nearest
-  centroid; queries probe ``nprobe`` nearest centroid lists.
+- :func:`kmeans_fit` + :func:`ivf_build` / :func:`ivf_probe` /
+  :func:`ivf_probe_batch` / :func:`ivf_topk` — inverted-file variant:
+  corpus assigned to nearest centroid; queries probe ``nprobe`` nearest
+  centroid lists.
+- :func:`knn_label_vote_arrow` and the product-quantization trio
+  (:func:`pq_train`, :func:`pq_encode`, :func:`pq_topk`).
 
-All vector math is HOF expressions (no UDF); hyperplanes are
-deterministic (seeded LCG) so results reproduce everywhere.
+Every reported ``cos`` is a Spark expression (HOF folds,
+``F.round(..., 6)``). The k-means fit, centroid assignment, batch-probe
+pre-selection, kNN vote and PQ encode/ADC are NumPy kernels in Arrow
+UDFs; the k-means pieces are module-level helpers that executor
+closures call directly. Hyperplanes and k-means init are deterministic
+(seeded LCG / seeded ``xxhash64``), so results reproduce everywhere.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import numpy as np
 import pandas as pd
@@ -196,482 +204,282 @@ def kmeans_fit(
     seed: int = 42,
 ) -> DataFrame:
     """Lloyd's k-means over an embedding column — learns the centroid
-    table :func:`ivf_topk` probes, entirely in DataFrame ops.
+    table :func:`ivf_topk` probes. Returns a materialized local relation
+    ``(centroid_id int, centroid array<double>)``: only the <= k
+    centroids ever reach the driver, never the data, and downstream
+    actions never re-run the fit.
 
-    Per iteration: assign every row to its max-cosine centroid (broadcast
-    cross join + per-row rank — centroids are k*dim floats, always
-    broadcastable), then recompute centroids as element-wise means
-    (``avg(vec[i])`` per dimension — map-side partial agg, one shuffle of
-    k*dim partials). Only the k centroids ever reach the driver, never
-    the data. Init is the k rows with the smallest ``xxhash64(id, seed)``
-    — a deterministic pseudo-random sample.
+    Init is the k rows with the smallest ``(xxhash64(id, seed), id)`` —
+    a deterministic pseudo-random sample. Each iteration assigns every
+    row to its max-cosine centroid (cosine quantized to 9 dp, ties to
+    the lowest centroid id) and moves each non-empty cluster's centroid
+    to its rows' mean; empty clusters keep their centroid, and the loop
+    stops early once an update changes nothing.
 
-    For ``k`` past :data:`_FLAT_K_MAX` the flat loop's O(n*k*d)
-    per-iteration matmul is replaced by the two-level fit
-    (:func:`_kmeans_fit_hierarchical`) — O(n*sqrt(k)*d) per pass —
-    which is what the IVF deployment rule k ∝ n (SURVEY §6) needs to
-    stay sub-quadratic at 100 TB. Every registry query pins k <= 64,
-    so all attested plans stay on the flat path bit-for-bit.
+    For ``k`` past :data:`_FLAT_K_MAX` the flat O(n*k*d) iteration is
+    replaced by a two-level fit — O(n*sqrt(k)*d) per pass — which is
+    what the IVF deployment rule k ∝ n (SURVEY §6) needs to stay
+    sub-quadratic at 100 TB:
+
+    1. fit ``k1 = ceil(sqrt(k))`` COARSE centroids;
+    2. assign every row to its nearest coarse cell;
+    3. fit each cell's budget of LOCAL centroids (``k // k1``, +1 for
+       the first ``k % k1`` cells, so budgets sum to exactly k) with
+       :func:`_local_fit`. A cell smaller than its budget yields one
+       centroid per row, so the count never exceeds k but can land
+       under it on degenerate splits.
+
+    Two physical plans compute the same centroids bit-for-bit for
+    k <= 4096 (pinned by
+    tests/test_approx_recall.py::test_kmeans_fit_fused_matches_loop;
+    above that the staged coarse fit is itself two-level), and the
+    input's split count picks one: a single-partition input
+    (every single-row-group sf scan) runs the whole fit as one Arrow
+    task (:func:`_fit_one_task`), because the staged form there is a
+    chain of serial one-task jobs, each paying the ~0.2s Python-stage
+    launch floor for millisecond kernels; a many-split scan runs
+    :func:`_fit_staged`, one distributed pass per Lloyd's iteration.
     """
-    if k > _FLAT_K_MAX:
-        return _kmeans_fit_hierarchical(
-            df, k, dim, max_iters, vec_col, id_col, seed
-        )
-    spark = df.sparkSession
-    src_iv = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    # Single-partition inputs (every single-row-group sf scan — the same
-    # unsplittable-input class spread_to_parallelism gates on) run the
-    # WHOLE fit as one Arrow task: the distributed loop degenerates to
-    # `1 init job + max_iters serial one-task jobs` there, each paying
-    # the ~0.2s Python-stage launch floor for work a single kernel does
-    # in milliseconds (r13 optimization round, guide §2.5/§4.5 — job
-    # COUNT is the only remaining lever on these serial fits). The
-    # fused kernel replays the loop path's arithmetic per batch in the
-    # same order, so the centroids are bit-identical
-    # (tests/test_approx_recall.py::test_kmeans_fit_fused_matches_loop).
-    # A many-split 100 TB scan takes the distributed loop unchanged.
-    if _FUSE_SINGLE_PARTITION and src_iv.rdd.getNumPartitions() == 1:
-        centroids = _kmeans_fit_fused_one_partition(src_iv, k, max_iters, seed)
-        return spark.createDataFrame(
-            [(i, v) for i, v in enumerate(centroids)],
-            "centroid_id int, centroid array<double>",
-        )
-    init = (
-        src_iv
-        .orderBy(F.xxhash64(F.col("_id"), F.lit(seed)), F.col("_id"))
-        .limit(k)
-        .select(F.col("_v").cast("array<double>").alias("centroid"))
-        .collect()
-    )
-    centroids = [list(r.centroid) for r in init]
+    src = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+    if src.rdd.getNumPartitions() == 1:
+        return _fit_one_task(src, k, max_iters, seed)
+    return _fit_staged(src, k, max_iters, seed)
 
-    # NB (r13 optimization round): spreading src to defaultParallelism
-    # was tried and reverted — with a small vector table each of the 32
-    # per-iteration Arrow tasks pays ~0.2s of Python-worker round-trip
-    # for a ~60-row batch, so the fit got SLOWER (1.2s -> 1.9s at
-    # sf0.1). At scale the scan splits naturally and the fused partials
-    # already parallelize.
-    src = df.select(F.col(vec_col).alias("_v"))
+
+# k above which kmeans_fit switches to the two-level strategy. Every
+# registry query but the two-level attestation pins k <= 64; only the
+# k ∝ n scale configurations cross it.
+_FLAT_K_MAX = 64
+
+_CENTROIDS_SCHEMA = "centroid_id int, centroid array<double>"
+_CELL_CENTROIDS_SCHEMA = "_ccid bigint, _lidx bigint, centroid array<double>"
+
+
+# ---------------------------------------------------------------------------
+# k-means arithmetic. Each piece has one home below, and the executor
+# closures of both fit plans (and of the IVF assignment and batch probe)
+# call it directly, so the plans run the same float ops in the same
+# order. Matrices are always built per Arrow batch and the partial sums
+# are accumulated batch by batch — never one concatenated matmul, since
+# BLAS blocking may differ by matrix shape.
+# ---------------------------------------------------------------------------
+
+
+def _as_matrix(vs: pd.Series) -> np.ndarray:
+    """Vector column of one Arrow batch -> float64 row matrix (float32
+    widens exactly like the JVM's ``cast("array<double>")``)."""
+    return np.vstack(vs.to_numpy()).astype(np.float64)
+
+
+def _cosine_matrix(m: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """(rows x centroids) cosine matrix; a zero-norm side scores 0.0."""
+    mnorm = np.sqrt(np.einsum("ij,ij->i", m, m))
+    cnorm = np.sqrt(np.einsum("ij,ij->i", cents, cents))
+    den = mnorm[:, None] * cnorm[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(den == 0, 0.0, (m @ cents.T) / den)
+
+
+def _nearest(cos: np.ndarray, n: int, decimals: int) -> np.ndarray:
+    """Column indices of each row's ``n`` best cosines: cosine quantized
+    to ``decimals``, ties to the lowest column (stable argsort)."""
+    return np.argsort(-np.round(cos, decimals), axis=1, kind="stable")[:, :n]
+
+
+def _lloyd_partials(mats, cents: np.ndarray):
+    """One Lloyd's assignment over float64 batches: per-centroid row
+    counts and vector sums, accumulated with ``np.add.at`` batch by
+    batch in the order given."""
+    cnt = np.zeros(len(cents), dtype=np.int64)
+    sums = np.zeros_like(cents)
+    for m in mats:
+        cid = _nearest(_cosine_matrix(m, cents), 1, 9)[:, 0]
+        np.add.at(cnt, cid, 1)
+        np.add.at(sums, cid, m)
+    return cnt, sums
+
+
+def _lloyd(centroids: list, max_iters: int, partials) -> list:
+    """Flat Lloyd's loop over a list of centroid lists. ``partials(cents)``
+    returns the (counts, sums) of one assignment pass; each non-empty
+    cluster moves to ``sums / counts`` (as Python floats), an empty one
+    keeps its centroid, and the loop stops once nothing changes."""
     for _ in range(max_iters):
-        # one fused Arrow pass per iteration: assign AND partial-sum in
-        # the same mapInPandas (one (cnt, sum-vector) partial per cid
-        # per PARTITION reaches the driver — k*dim doubles per
-        # partition, bounded by design). The merge mirrors avg()'s own
-        # per-partition partial-sum shape; the old form paid a separate
-        # pandas-UDF pass plus a 64-expression avg aggregation per
-        # iteration (~0.7s/iter at sf0.1 vs ~0.25s fused).
-        cents_m = np.array(centroids, dtype=np.float64)
-        cnorm = np.sqrt(np.einsum("ij,ij->i", cents_m, cents_m))
-
-        def _partials(batches):
-            cnt = np.zeros(len(cents_m), dtype=np.int64)
-            sums = np.zeros_like(cents_m)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                m = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-                den = np.sqrt(np.einsum("ij,ij->i", m, m))[:, None] * cnorm[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(den == 0, 0.0, (m @ cents_m.T) / den)
-                # same quantized argmax discipline as _nearest_cells_udf
-                # (round 9, lowest cid wins ties via stable argsort)
-                cid = np.argsort(-np.round(cos, 9), axis=1, kind="stable")[:, 0]
-                np.add.at(cnt, cid, 1)
-                np.add.at(sums, cid, m)
-            yield pd.DataFrame(
-                {
-                    "cid": np.arange(len(cents_m), dtype=np.int64),
-                    "cnt": cnt,
-                    "s": list(sums),
-                }
-            )
-
-        parts = src.mapInPandas(
-            _partials, "cid bigint, cnt bigint, s array<double>"
-        ).collect()
-        cnt_tot = np.zeros(len(cents_m), dtype=np.int64)
-        sum_tot = np.zeros_like(cents_m)
-        for r in parts:
-            cnt_tot[r.cid] += r.cnt
-            sum_tot[r.cid] += np.asarray(r.s, dtype=np.float64)
-        new_centroids = list(centroids)
-        for i in range(len(cents_m)):
-            if cnt_tot[i] > 0:  # empty clusters keep their previous centroid
-                new_centroids[i] = [float(x) for x in sum_tot[i] / cnt_tot[i]]
-        if new_centroids == centroids:
+        cnt, sums = partials(np.array(centroids, dtype=np.float64))
+        new = list(centroids)
+        for i in range(len(new)):
+            if cnt[i] > 0:
+                new[i] = [float(x) for x in sums[i] / cnt[i]]
+        if new == centroids:
             break
-        centroids = new_centroids
+        centroids = new
+    return centroids
 
+
+def _init_pick(h: np.ndarray, ids: np.ndarray, k: int) -> list:
+    """Row indices of the ``k`` smallest ``(xxhash64, id)`` keys — the
+    staged plan's ``orderBy(xxhash64(_id, seed), _id).limit(k)``; a
+    Python tuple sort keeps the order exact for any orderable id."""
+    return sorted(range(len(h)), key=lambda i: (h[i], ids[i]))[:k]
+
+
+def _coarse_k(k: int) -> int:
+    return max(2, int(np.ceil(np.sqrt(k))))
+
+
+def _local_fit(
+    ids: pd.Series, mat: np.ndarray, cell: int, k: int, k1: int, max_iters: int, seed: int
+) -> np.ndarray:
+    """Local centroids of one coarse cell of the two-level fit.
+
+    The cell's rows are first re-ordered by a seeded md5 of their id:
+    which rows a cell receives is fixed, but their order is not (shuffle
+    order), and float sums are order-sensitive. Init is the first
+    ``min(budget, rows)`` rows in that order; each step assigns by the
+    9-dp quantized argmax and moves each non-empty cluster to
+    ``mean(axis=0)`` of its rows, stopping once an update is
+    ``array_equal`` to the previous centroids."""
+    keys = np.array(
+        [hashlib.md5(f"{v}#s{seed}".encode()).hexdigest() for v in ids.astype(str).to_numpy()]
+    )
+    mat = mat[np.argsort(keys, kind="stable")]
+    kk = min(k // k1 + (1 if cell < k % k1 else 0), len(mat))
+    cents = mat[:kk].copy()
+    for _ in range(max_iters):
+        cid = _nearest(_cosine_matrix(mat, cents), 1, 9)[:, 0]
+        new = cents.copy()
+        for i in range(kk):
+            sel = cid == i
+            if sel.any():
+                new[i] = mat[sel].mean(axis=0)
+        if np.array_equal(new, cents):
+            break
+        cents = new
+    return cents
+
+
+def _cell_frame(cell: int, cents) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "_ccid": np.full(len(cents), cell, dtype=np.int64),
+            "_lidx": np.arange(len(cents), dtype=np.int64),
+            "centroid": list(cents),
+        }
+    )
+
+
+def _centroid_frame(spark, cell_rows) -> DataFrame:
+    """Global centroid ids: enumerate the collected per-cell rows in
+    ``(_ccid, _lidx)`` order."""
+    rows = sorted(cell_rows, key=lambda r: (r._ccid, r._lidx))
     return spark.createDataFrame(
-        [(i, v) for i, v in enumerate(centroids)],
-        "centroid_id int, centroid array<double>",
+        [(i, list(r.centroid)) for i, r in enumerate(rows)], _CENTROIDS_SCHEMA
     )
 
 
-def _kmeans_fit_fused_one_partition(
-    src_iv: DataFrame, k: int, max_iters: int, seed: int
-) -> list:
-    """Flat Lloyd's fit fused into ONE Arrow task for a single-partition
-    input — returns the centroid list the caller materializes.
-
-    Bit-identity with the distributed loop on the same (one-partition)
-    input is the contract, and every float op mirrors it exactly:
-
-    - init: the k rows with the smallest ``(xxhash64(id, seed), id)`` —
-      the hash is computed by the SAME JVM expression (shipped in as a
-      column); the kernel only sorts and slices, and float32 vectors
-      widen via ``astype(float64)`` exactly as the loop path's JVM
-      ``cast("array<double>")``;
-    - per iteration: the same per-BATCH ``np.add.at`` partial sums in
-      the same batch order as ``_partials`` (never one concatenated
-      matmul — BLAS blocking may differ by matrix shape), the same
-      quantized stable-argmax assignment, the same Python-float
-      round-trip of each new centroid, the same empty-cluster keep and
-      list-equality early break. The loop path's driver merge adds the
-      single partial onto zeros, which is the identity — so skipping
-      it changes nothing.
-    """
-    with_h = src_iv.select(
-        F.xxhash64(F.col("_id"), F.lit(seed)).alias("_h"), "_id", "_v"
-    )
+def _fit_one_task(src: DataFrame, k: int, max_iters: int, seed: int) -> DataFrame:
+    """The whole fit — flat, or coarse + assignment + per-cell local
+    fits — inside ONE ``mapInPandas`` task over ``src`` (columns
+    ``_id``, ``_v``), for single-partition inputs, where it returns
+    what :func:`_fit_staged` returns, bit-for-bit. The init hash is the
+    same JVM ``xxhash64`` expression, shipped in as a column; each
+    Lloyd's pass sums the same batches in the same order (the staged
+    driver merge adds the lone partition's partials onto zeros, the
+    identity); the coarse assignment is the same quantized argmax; and
+    each cell's md5 re-sort makes scan order vs shuffle order
+    immaterial."""
+    k1 = _coarse_k(k) if k > _FLAT_K_MAX else None
+    with_h = src.select(F.xxhash64(F.col("_id"), F.lit(seed)).alias("_h"), "_id", "_v")
 
     def _fit(batches):
         hs, ids, mats = [], [], []
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            hs.append(pdf["_h"].to_numpy())
-            ids.append(pdf["_id"].to_numpy())
-            mats.append(np.vstack(pdf["_v"].to_numpy()).astype(np.float64))
+            if len(pdf):
+                hs.append(pdf["_h"].to_numpy())
+                ids.append(pdf["_id"].to_numpy())
+                mats.append(_as_matrix(pdf["_v"]))
         if not mats:
             return
-        h = np.concatenate(hs)
-        idv = np.concatenate(ids)
-        # total order (hash asc, id asc) == the loop path's
-        # orderBy(xxhash64, _id).limit(k); Python tuple sort keeps it
-        # exact for any orderable id type
-        order = sorted(range(len(h)), key=lambda i: (h[i], idv[i]))[:k]
-        offs = np.cumsum([0] + [len(m) for m in mats])
-        X_at = lambda i: mats[np.searchsorted(offs, i, side="right") - 1][  # noqa: E731
-            i - offs[np.searchsorted(offs, i, side="right") - 1]
-        ]
-        centroids = [[float(x) for x in X_at(i)] for i in order]
-        for _ in range(max_iters):
-            cents_m = np.array(centroids, dtype=np.float64)
-            cnorm = np.sqrt(np.einsum("ij,ij->i", cents_m, cents_m))
-            cnt_tot = np.zeros(len(cents_m), dtype=np.int64)
-            sum_tot = np.zeros_like(cents_m)
-            for m in mats:
-                den = np.sqrt(np.einsum("ij,ij->i", m, m))[:, None] * cnorm[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(den == 0, 0.0, (m @ cents_m.T) / den)
-                cid = np.argsort(-np.round(cos, 9), axis=1, kind="stable")[:, 0]
-                np.add.at(cnt_tot, cid, 1)
-                np.add.at(sum_tot, cid, m)
-            new_centroids = list(centroids)
-            for i in range(len(cents_m)):
-                if cnt_tot[i] > 0:  # empty clusters keep their previous centroid
-                    new_centroids[i] = [float(x) for x in sum_tot[i] / cnt_tot[i]]
-            if new_centroids == centroids:
-                break
-            centroids = new_centroids
-        yield pd.DataFrame(
-            {
-                "centroid_id": np.arange(len(centroids), dtype=np.int32),
-                "centroid": centroids,
-            }
+        idv, X = np.concatenate(ids), np.concatenate(mats)
+        init = _init_pick(np.concatenate(hs), idv, k1 or k)
+        cents = _lloyd(
+            [[float(x) for x in X[i]] for i in init],
+            max_iters,
+            lambda c: _lloyd_partials(mats, c),
         )
+        if k1 is None:
+            yield _cell_frame(0, cents)
+            return
+        cents_m = np.array(cents, dtype=np.float64)
+        cid = np.concatenate([_nearest(_cosine_matrix(m, cents_m), 1, 9)[:, 0] for m in mats])
+        id_series = pd.Series(idv)
+        for c in sorted(set(cid.tolist())):
+            sel = cid == c
+            yield _cell_frame(c, _local_fit(id_series[sel], X[sel], c, k, k1, max_iters, seed))
 
-    rows = with_h.mapInPandas(
-        _fit, "centroid_id int, centroid array<double>"
-    ).collect()
-    return [list(r.centroid) for r in sorted(rows, key=lambda r: r.centroid_id)]
-
-
-# Escape hatch for the single-partition fused fit (parity tests flip it
-# to force the distributed loop on the same input and assert the two
-# paths return bit-identical centroids).
-_FUSE_SINGLE_PARTITION = True
-
-# k above which kmeans_fit switches to the two-level strategy. Every
-# registry query pins k <= 64 (flat path, attested plans unchanged);
-# only the k ∝ n scale configurations cross it.
-_FLAT_K_MAX = 64
-
-
-def _kmeans_fit_hierarchical(
-    df: DataFrame,
-    k: int,
-    dim: int,
-    max_iters: int,
-    vec_col: str,
-    id_col: str,
-    seed: int,
-) -> DataFrame:
-    """Two-level (coarse, then per-cell local) k-means for large ``k``.
-
-    Motivation (measured, SURVEY §6): under the IVF deployment rule
-    k ∝ n (bounded cell size), the flat Lloyd's fit is O(n*k*d) =
-    O(n^2*d / cell_size) — the fit, not the candidate verify, becomes
-    the quadratic piece of the near-dup pipeline (the 100x k∝n point's
-    super-linear step is entirely fit growth). This is the same answer
-    production ANN systems give (FAISS's coarse quantizer hierarchy):
-
-    1. fit ``k1 = ceil(sqrt(k))`` COARSE centroids with the flat loop —
-       O(n*sqrt(k)*d) per iteration;
-    2. assign every row to its nearest coarse cell (one Arrow matmul
-       pass);
-    3. fit each coarse cell's budget of LOCAL centroids (k // k1, +1
-       for the first k % k1 cells — budgets sum to exactly k) with
-       ``groupBy().applyInPandas`` — cells fit independently and
-       in parallel, total O(n*sqrt(k)*d) per iteration.
-
-    Total fit work is O(n*sqrt(k)*d) — O(n^1.5) under k ∝ n — and the
-    result is still "~k centroids whose cells are corpus-size/k" (what
-    the blocking join needs). Per-cell budgets sum to exactly k
-    (k // k1 each, +1 for the first k % k1 cells), so the count NEVER
-    exceeds k; cells smaller than their budget emit one centroid per
-    row, so it can land under k on degenerate splits. Like the flat
-    path, the returned DataFrame is a materialized local relation —
-    only the ~k centroids ever reach the driver, and downstream
-    actions never re-execute the fit.
-
-    Determinism discipline matches the flat path: group rows are
-    re-ordered by a seeded md5 of their id before any float touches
-    them (applyInPandas group order is shuffle-dependent; float sums
-    are order-sensitive), init is the first budget rows in that hash
-    order, assignment uses the quantized argmax with stable ties
-    (coarse assignment passes decimals=9 so its quantization matches
-    the flat fit's per-iteration argmax, not the probe paths' 6), and
-    empty clusters keep their previous centroid.
-
-    Memory contract: step 3's ``groupBy().applyInPandas`` loads ONE
-    coarse cell per executor pandas frame, so each cell must fit in
-    executor memory — ~n/k1 rows * dim doubles for a balanced coarse
-    fit. A degenerate coarse fit (e.g. a near-identical corpus) can
-    dump most rows into one cell and OOM that executor; if the corpus
-    may degenerate, cap cell size upstream (salt oversized cells on a
-    hash of the id) before fitting.
-    """
-    import hashlib
-
-    k1 = max(2, int(np.ceil(np.sqrt(k))))
-    # Single-partition inputs run coarse fit + assignment + every local
-    # fit as ONE Arrow task (r13 optimization round — the same gate and
-    # rationale as the flat path's fused kernel: on a one-task scan the
-    # staged form is 2 serial Python-stage jobs at the measured ~0.2s
-    # launch floor each, plus an exchange that buys nothing). Arithmetic
-    # is replayed op-for-op — bit-identity with the staged path is
-    # pinned by test_kmeans_fit_fused_matches_loop's hierarchical leg.
-    src_iv = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    if _FUSE_SINGLE_PARTITION and src_iv.rdd.getNumPartitions() == 1:
-        return _kmeans_fit_hierarchical_fused(
-            src_iv, k, k1, max_iters, seed
-        )
-    coarse = kmeans_fit(
-        df, k=k1, dim=dim, max_iters=max_iters,
-        vec_col=vec_col, id_col=id_col, seed=seed,
-    )
-    cent = F.broadcast(
-        coarse.select(
-            F.col("centroid_id").alias("_cid"), F.col("centroid").alias("_cvec")
-        )
-    )
-    assigned = _assign_to_centroids(
-        df.select(id_col, vec_col), cent, id_col, vec_col, 1, "_id", dim,
-        decimals=9,
+    return _centroid_frame(
+        src.sparkSession, with_h.mapInPandas(_fit, _CELL_CENTROIDS_SCHEMA).collect()
     )
 
-    base, extra = k // k1, k % k1
+
+def _fit_staged(src: DataFrame, k: int, max_iters: int, seed: int) -> DataFrame:
+    """The distributed fit over ``src`` (columns ``_id``, ``_v``), for
+    many-split scans. Flat: a JVM ``orderBy(...).limit(k)`` init, then
+    one ``mapInPandas`` job per iteration that assigns and partial-sums
+    in the same pass — one (count, sum-vector) row per centroid per
+    partition reaches the driver, k*dim doubles per partition.
+    Two-level: the coarse fit (this function at ``k1``), a nearest-cell
+    assignment pass, then one ``groupBy().applyInPandas`` local fit per
+    coarse cell, all cells in parallel.
+
+    Memory contract of the two-level form: ``applyInPandas`` loads ONE
+    coarse cell per executor pandas frame, ~n/k1 rows * dim doubles for
+    a balanced coarse fit. A degenerate coarse fit (e.g. a
+    near-identical corpus) can dump most rows into one cell and OOM
+    that executor; cap cell size upstream (salt oversized cells on a
+    hash of the id) if the corpus may degenerate."""
+    spark = src.sparkSession
+    if k <= _FLAT_K_MAX:
+        init = (
+            src.orderBy(F.xxhash64(F.col("_id"), F.lit(seed)), F.col("_id"))
+            .limit(k)
+            .select(F.col("_v").cast("array<double>").alias("centroid"))
+            .collect()
+        )
+        vecs = src.select("_v")
+
+        def _partials(cents):
+            def _part(batches):
+                cnt, sums = _lloyd_partials(
+                    (_as_matrix(pdf["_v"]) for pdf in batches if len(pdf)), cents
+                )
+                yield pd.DataFrame(
+                    {"cid": np.arange(len(cents), dtype=np.int64), "cnt": cnt, "s": list(sums)}
+                )
+
+            cnt = np.zeros(len(cents), dtype=np.int64)
+            sums = np.zeros_like(cents)
+            for r in vecs.mapInPandas(_part, "cid bigint, cnt bigint, s array<double>").collect():
+                cnt[r.cid] += r.cnt
+                sums[r.cid] += np.asarray(r.s, dtype=np.float64)
+            return cnt, sums
+
+        cents = _lloyd([list(r.centroid) for r in init], max_iters, _partials)
+        return spark.createDataFrame(list(enumerate(cents)), _CENTROIDS_SCHEMA)
+
+    k1 = _coarse_k(k)
+    coarse = _fit_staged(src, k1, max_iters, seed)
+    cent = coarse.select(F.col("centroid_id").alias("_cid"), F.col("centroid").alias("_cvec"))
+    assigned = _assign_to_centroids(src, cent, "_id", "_v", 1, "_id", decimals=9)
 
     def _local(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = np.array(
-            [
-                hashlib.md5(f"{v}#s{seed}".encode()).hexdigest()
-                for v in pdf["_id"].astype(str).to_numpy()
-            ]
-        )
-        order = np.argsort(keys, kind="stable")
-        mat = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)[order]
-        cid0 = int(pdf["_cid"].iloc[0])
-        budget = base + (1 if cid0 < extra else 0)
-        kk = min(budget, len(pdf))
-        cents = mat[:kk].copy()
-        vnorm = np.sqrt(np.einsum("ij,ij->i", mat, mat))
-        for _ in range(max_iters):
-            cnorm = np.sqrt(np.einsum("ij,ij->i", cents, cents))
-            den = vnorm[:, None] * cnorm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den == 0, 0.0, (mat @ cents.T) / den)
-            cid = np.argsort(-np.round(cos, 9), axis=1, kind="stable")[:, 0]
-            new = cents.copy()
-            for i in range(kk):
-                sel = cid == i
-                if sel.any():
-                    new[i] = mat[sel].mean(axis=0)
-            if np.array_equal(new, cents):
-                break
-            cents = new
-        return pd.DataFrame(
-            {
-                "_ccid": np.full(kk, cid0, dtype=np.int64),
-                "_lidx": np.arange(kk, dtype=np.int32),
-                "centroid": list(cents),
-            }
+        cell = int(pdf["_cid"].iloc[0])
+        return _cell_frame(
+            cell, _local_fit(pdf["_id"], _as_matrix(pdf["_v"]), cell, k, k1, max_iters, seed)
         )
 
-    locals_df = assigned.groupBy("_cid").applyInPandas(
-        _local, "_ccid bigint, _lidx int, centroid array<double>"
-    )
-    # materialize ONCE (<= k rows — the same driver-bounded collect the
-    # flat path ends in): returning the lazy plan would re-execute the
-    # corpus assignment + every local fit on EACH downstream action
-    # (e.g. per probe pass), and the global ids come from a plain sort
-    # of the collected rows instead of a window
-    rows = sorted(
-        locals_df.collect(), key=lambda r: (r._ccid, r._lidx)
-    )
-    return df.sparkSession.createDataFrame(
-        [(i, list(r.centroid)) for i, r in enumerate(rows)],
-        "centroid_id int, centroid array<double>",
-    )
-
-
-def _kmeans_fit_hierarchical_fused(
-    src_iv: DataFrame, k: int, k1: int, max_iters: int, seed: int
-) -> DataFrame:
-    """Two-level fit fused into ONE Arrow task for a single-partition
-    input: coarse Lloyd's, nearest-cell assignment, and every per-cell
-    local fit run inside a single kernel instead of two serial
-    Python-stage jobs with an exchange between them.
-
-    Every float op replays the staged path op-for-op (the kernel bodies
-    are kept self-contained by repo convention — executors must not
-    need the package importable — so the Lloyd's block is duplicated
-    from `_kmeans_fit_fused_one_partition`; the hierarchical leg of
-    test_kmeans_fit_fused_matches_loop pins the two paths bit-equal):
-
-    - coarse: identical init selection and per-batch partial-sum loop
-      as the flat fused kernel;
-    - assignment: the same per-batch matmul + round(9) stable argmax as
-      `_nearest_cells_udf` (row-local, so batch boundaries are moot);
-    - locals: `_local`'s exact body per cell — md5 re-order, first-kk
-      init, quantized argmax, per-cluster mean, array_equal break —
-      iterated in ascending cell order (cell row ORDER is neutralized
-      by the md5 re-sort, so scan order vs shuffle order is immaterial);
-    - driver: the same sort by (_ccid, _lidx) + enumerate.
-    """
-    import hashlib
-
-    with_h = src_iv.select(
-        F.xxhash64(F.col("_id"), F.lit(seed)).alias("_h"), "_id", "_v"
-    )
-    base, extra = k // k1, k % k1
-
-    def _fit_all(batches):
-        hs, ids, mats = [], [], []
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            hs.append(pdf["_h"].to_numpy())
-            ids.append(pdf["_id"].to_numpy())
-            mats.append(np.vstack(pdf["_v"].to_numpy()).astype(np.float64))
-        if not mats:
-            return
-        h = np.concatenate(hs)
-        idv = np.concatenate(ids)
-        # ---- coarse Lloyd's: same block as the flat fused kernel ----
-        order = sorted(range(len(h)), key=lambda i: (h[i], idv[i]))[:k1]
-        offs = np.cumsum([0] + [len(m) for m in mats])
-        X_at = lambda i: mats[np.searchsorted(offs, i, side="right") - 1][  # noqa: E731
-            i - offs[np.searchsorted(offs, i, side="right") - 1]
-        ]
-        centroids = [[float(x) for x in X_at(i)] for i in order]
-        for _ in range(max_iters):
-            cents_m = np.array(centroids, dtype=np.float64)
-            cnorm = np.sqrt(np.einsum("ij,ij->i", cents_m, cents_m))
-            cnt_tot = np.zeros(len(cents_m), dtype=np.int64)
-            sum_tot = np.zeros_like(cents_m)
-            for m in mats:
-                den = np.sqrt(np.einsum("ij,ij->i", m, m))[:, None] * cnorm[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(den == 0, 0.0, (m @ cents_m.T) / den)
-                cid = np.argsort(-np.round(cos, 9), axis=1, kind="stable")[:, 0]
-                np.add.at(cnt_tot, cid, 1)
-                np.add.at(sum_tot, cid, m)
-            new_centroids = list(centroids)
-            for i in range(len(cents_m)):
-                if cnt_tot[i] > 0:
-                    new_centroids[i] = [float(x) for x in sum_tot[i] / cnt_tot[i]]
-            if new_centroids == centroids:
-                break
-            centroids = new_centroids
-        # ---- assignment: _nearest_cells_udf(n=1, decimals=9) ----
-        cents_s = np.array(centroids, dtype=np.float64)
-        cids_s = np.arange(len(centroids), dtype=np.int64)
-        cnorm = np.sqrt(np.einsum("ij,ij->i", cents_s, cents_s))
-        cid_parts = []
-        for m in mats:
-            den = np.sqrt(np.einsum("ij,ij->i", m, m))[:, None] * cnorm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den == 0, 0.0, (m @ cents_s.T) / den)
-            idx = np.argsort(-np.round(cos, 9), axis=1, kind="stable")[:, :1]
-            cid_parts.append(cids_s[idx][:, 0].astype(np.int32))
-        allcid = np.concatenate(cid_parts)
-        X = np.concatenate(mats)
-        id_series = pd.Series(idv)
-        # ---- per-cell local fits: _local's body, ascending cell id ----
-        out_ccid, out_lidx, out_cent = [], [], []
-        for c in sorted(set(allcid.tolist())):
-            sel_cell = allcid == c
-            cell_ids = id_series[sel_cell]
-            keys = np.array(
-                [
-                    hashlib.md5(f"{v}#s{seed}".encode()).hexdigest()
-                    for v in cell_ids.astype(str).to_numpy()
-                ]
-            )
-            order = np.argsort(keys, kind="stable")
-            mat = np.vstack(list(X[sel_cell])).astype(np.float64)[order]
-            budget = base + (1 if c < extra else 0)
-            kk = min(budget, len(mat))
-            cents = mat[:kk].copy()
-            vnorm = np.sqrt(np.einsum("ij,ij->i", mat, mat))
-            for _ in range(max_iters):
-                cn = np.sqrt(np.einsum("ij,ij->i", cents, cents))
-                den = vnorm[:, None] * cn[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(den == 0, 0.0, (mat @ cents.T) / den)
-                cid = np.argsort(-np.round(cos, 9), axis=1, kind="stable")[:, 0]
-                new = cents.copy()
-                for i in range(kk):
-                    sel = cid == i
-                    if sel.any():
-                        new[i] = mat[sel].mean(axis=0)
-                if np.array_equal(new, cents):
-                    break
-                cents = new
-            out_ccid.extend([int(c)] * kk)
-            out_lidx.extend(range(kk))
-            out_cent.extend(list(cents))
-        yield pd.DataFrame(
-            {
-                "_ccid": np.array(out_ccid, dtype=np.int64),
-                "_lidx": np.array(out_lidx, dtype=np.int32),
-                "centroid": out_cent,
-            }
-        )
-
-    rows = sorted(
-        with_h.mapInPandas(
-            _fit_all, "_ccid bigint, _lidx int, centroid array<double>"
-        ).collect(),
-        key=lambda r: (r._ccid, r._lidx),
-    )
-    return src_iv.sparkSession.createDataFrame(
-        [(i, list(r.centroid)) for i, r in enumerate(rows)],
-        "centroid_id int, centroid array<double>",
-    )
+    cells = assigned.groupBy("_cid").applyInPandas(_local, _CELL_CENTROIDS_SCHEMA)
+    return _centroid_frame(spark, cells.collect())
 
 
 def _nearest_cells_udf(cids: "np.ndarray", cents: "np.ndarray", n: int, decimals: int):
@@ -694,17 +502,12 @@ def _nearest_cells_udf(cids: "np.ndarray", cents: "np.ndarray", n: int, decimals
     order = np.argsort(cids, kind="stable")
     cids_s = cids[order]
     cents_s = cents[order]
-    cnorm = np.sqrt(np.einsum("ij,ij->i", cents_s, cents_s))
 
     @F.pandas_udf("array<int>")
     def _near(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:
             return pd.Series([], dtype=object)
-        m = np.vstack(vs.to_numpy()).astype(np.float64)
-        den = np.sqrt(np.einsum("ij,ij->i", m, m))[:, None] * cnorm[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(den == 0, 0.0, (m @ cents_s.T) / den)
-        idx = np.argsort(-np.round(cos, decimals), axis=1, kind="stable")[:, :n]
+        idx = _nearest(_cosine_matrix(_as_matrix(vs), cents_s), n, decimals)
         return pd.Series(list(cids_s[idx].astype(np.int32)))
 
     return _near
@@ -948,20 +751,15 @@ def ivf_probe_batch(
         if len(idx_pdf) == 0 or len(q_pdf) == 0:
             return pd.DataFrame(_EMPTY)
         ids = idx_pdf["vec_id"].to_numpy()
-        C = np.vstack([np.asarray(v, dtype=np.float64) for v in idx_pdf["embedding"]])
+        C = _as_matrix(idx_pdf["embedding"])
         nbs = idx_pdf["_nb"].to_numpy(dtype="float64")
-        cn = np.sqrt(np.einsum("ij,ij->i", C, C))
         kk = min(k, len(ids))
         outs = []
         qids_all = q_pdf["query_id"].to_numpy()
-        qvs_all = q_pdf["_qv"].to_numpy()
         for s in range(0, len(q_pdf), chunk_rows):
-            Qm = np.vstack([np.asarray(v, dtype=np.float64) for v in qvs_all[s : s + chunk_rows]])
+            Qm = _as_matrix(q_pdf["_qv"].iloc[s : s + chunk_rows])
             qid = qids_all[s : s + chunk_rows]
-            qn = np.sqrt(np.einsum("ij,ij->i", Qm, Qm))
-            den = qn[:, None] * cn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den == 0, 0.0, (Qm @ C.T) / den)
+            cos = _cosine_matrix(Qm, C)
             # keep everything within the margin of the cell's k-th best:
             # a dropped row is > 1e-4 below kk in-cell rows, so it can
             # never re-enter the exact global top-k after the <= 1e-6

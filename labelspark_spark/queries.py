@@ -3847,7 +3847,7 @@ def q_kmeans_twolevel_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     hierarchical coarse->per-cell fit that the k ∝ n scale rule relies
     on rested on a single pytest geometry). Same shape as
     `kmeans_ivf_recall`, but k=72 routes `sim.kmeans_fit` through
-    `_kmeans_fit_hierarchical` (asserted in-query against the dispatch
+    the two-level fit (asserted in-query against the dispatch
     constant, so a future _FLAT_K_MAX bump can't silently reroute this
     attestation to the flat path). Recall of the IVF nprobe=16 probe
     over the 72 learned centroids against the exact broadcast cosine

@@ -244,29 +244,63 @@ def test_embedding_ivf_dedup_recall_and_precision(spark):
 
 
 def test_kmeans_fit_fused_matches_loop(spark):
-    # r13 optimization round: single-partition inputs run the whole flat
-    # fit as ONE Arrow task (_kmeans_fit_fused_one_partition). The
-    # contract is BIT-identity with the distributed per-iteration loop
-    # on the same input — init selection, per-batch partial sums,
-    # quantized argmax, empty-cluster keep and early break all replay
-    # the loop path's arithmetic. Exercise several (k, iters) shapes
-    # including max_iters=0 (init only) and a k>n row-deficit.
+    # single-partition inputs run the whole fit as ONE Arrow task
+    # (_fit_one_task); many-split inputs run the staged plan
+    # (_fit_staged). The contract is BIT-identity of the two plans on
+    # the same input — init selection, per-batch partial sums,
+    # quantized argmax, empty-cluster keep and early break. Exercise
+    # several (k, iters) shapes including max_iters=0 (init only), a
+    # k>n row-deficit, and k > 64 (one-task two-level fit vs the staged
+    # coarse+assign+locals path).
     emb = read_table(spark, SF_CORRECT, "embeddings")
     assert emb.rdd.getNumPartitions() == 1, "fixture must be single-partition"
+    src = emb.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
     key = lambda r: r.centroid_id  # noqa: E731
-    # k <= 64: flat fused vs flat loop; k > 64: fully-fused two-level
-    # vs the staged coarse+assign+locals path (flag off disables BOTH
-    # fused gates, so the staged leg also exercises the loop coarse fit)
     for k, iters in ((4, 3), (16, 3), (8, 0), (9, 5), (72, 3), (81, 2)):
-        fused = similarity.kmeans_fit(emb, k=k, dim=64, max_iters=iters).collect()
-        try:
-            similarity._FUSE_SINGLE_PARTITION = False
-            loop = similarity.kmeans_fit(emb, k=k, dim=64, max_iters=iters).collect()
-        finally:
-            similarity._FUSE_SINGLE_PARTITION = True
+        fused = similarity._fit_one_task(src, k, iters, 42).collect()
+        loop = similarity._fit_staged(src, k, iters, 42).collect()
         assert [(r.centroid_id, tuple(r.centroid)) for r in sorted(fused, key=key)] == [
             (r.centroid_id, tuple(r.centroid)) for r in sorted(loop, key=key)
         ], f"fused/loop centroid divergence at k={k} iters={iters}"
+
+
+def test_kmeans_fit_staged_multi_partition(spark):
+    # a many-split input takes the staged plan through kmeans_fit
+    # itself (flat at k=16, two-level at k=72): same output contract
+    # as the one-task plan, deterministic across calls, and Lloyd's
+    # iterations never leave the mean best cosine below the init's
+    import math
+
+    from pyspark.sql import Window
+
+    from labelspark_spark.functions.vectors import cosine
+
+    emb = read_table(spark, SF_CORRECT, "embeddings").repartitionByRange(3, "vec_id")
+    assert emb.rdd.getNumPartitions() == 3
+
+    def objective(centroids):
+        w = Window.partitionBy("vec_id").orderBy(F.col("_cos").desc(), F.col("centroid_id"))
+        return (
+            emb.crossJoin(F.broadcast(centroids))
+            .withColumn("_cos", cosine(F.col("embedding").cast("array<double>"), F.col("centroid")))
+            .withColumn("_r", F.row_number().over(w))
+            .filter(F.col("_r") == 1)
+            .agg(F.avg("_cos"))
+            .first()[0]
+        )
+
+    key = lambda r: r.centroid_id  # noqa: E731
+    for k in (16, 72):
+        fit = similarity.kmeans_fit(emb, k=k, dim=64, max_iters=3)
+        c1 = sorted(fit.collect(), key=key)
+        c2 = sorted(similarity.kmeans_fit(emb, k=k, dim=64, max_iters=3).collect(), key=key)
+        assert [r.centroid_id for r in c1] == list(range(len(c1))) and len(c1) <= k
+        assert all(len(r.centroid) == 64 and all(map(math.isfinite, r.centroid)) for r in c1)
+        assert [(r.centroid_id, tuple(r.centroid)) for r in c1] == [
+            (r.centroid_id, tuple(r.centroid)) for r in c2
+        ], f"staged fit not deterministic at k={k}"
+        init = similarity.kmeans_fit(emb, k=k, dim=64, max_iters=0)
+        assert objective(fit) >= objective(init) - 1e-9, k
 
 
 def test_kmeans_fit_hierarchical_contract(spark):
@@ -637,8 +671,8 @@ def test_embedding_ivf_cell_local_cos_parity(spark):
 
 
 def test_cell_pairs_chunk_indices_match_triu():
-    # r14 (VERDICT r13 item 6): _cell_pairs generates each chunk's pair
-    # indices arithmetically (searchsorted over per-row start offsets)
+    # _cell_pairs generates each chunk's pair indices arithmetically
+    # (dedup._triu_chunks, a searchsorted over per-row start offsets)
     # instead of materializing np.triu_indices(n, 1) up front. Pin the
     # generated (qs, cs) sequence identical to triu's enumeration across
     # n values straddling chunk boundaries, including the chunk step
@@ -646,16 +680,8 @@ def test_cell_pairs_chunk_indices_match_triu():
     import numpy as np
 
     for n, step in ((2, 3), (5, 4), (37, 16), (129, 1 << 13), (200, 1 << 13)):
-        total = n * (n - 1) // 2
-        row_counts = np.arange(n - 1, 0, -1, dtype=np.int64)
-        row_starts = np.concatenate(([0], np.cumsum(row_counts)[:-1]))
-        got_q, got_c = [], []
-        for s in range(0, total, step):
-            p = np.arange(s, min(s + step, total), dtype=np.int64)
-            qs = np.searchsorted(row_starts, p, side="right") - 1
-            cs = p - row_starts[qs] + qs + 1
-            got_q.append(qs)
-            got_c.append(cs)
+        chunks = list(dedup._triu_chunks(n, step))
+        assert all(len(qs) <= step for qs, _ in chunks), n
         qi, ci = np.triu_indices(n, k=1)
-        assert np.array_equal(np.concatenate(got_q), qi), n
-        assert np.array_equal(np.concatenate(got_c), ci), n
+        assert np.array_equal(np.concatenate([qs for qs, _ in chunks]), qi), n
+        assert np.array_equal(np.concatenate([cs for _, cs in chunks]), ci), n

@@ -170,6 +170,23 @@ R13_CHANGED_NOT_IN_HEAD: dict[str, str] = {
         "jsonl_roundtrip",
     ]
 }
+# k-means helper consolidation (one Lloyd's core): the fit, the IVF
+# assignment UDF, the batch-probe pre-selector and the dedup pair-cosine
+# kernels now call shared module-level NumPy helpers. Outputs are
+# bit-identical to the previous tree (centroids, assignments, probe
+# results and pair cosines compared exactly at sf0.01 and sf0.1), and
+# the oracle replay of every query tools/changed_head.py flags for the
+# change is green at sf0.01 (8 hash-green + 7 rows-only, 0 failures).
+# Only the names below were not already listed above.
+R13_CHANGED_NOT_IN_HEAD.update(
+    {
+        name: (
+            "k-means helper consolidation: bit-identical outputs, flagged-"
+            "query oracle replay green at sf0.01; next head candidate"
+        )
+        for name in ["dedup_embedding_lsh", "dedup_embedding_lsh_recall", "similarity_ivf"]
+    }
+)
 
 # the frozen declared-approximate set (VERDICT r10: 12 rows-only
 # entries, every one carrying a driver-green hash-checked companion)

@@ -1,4 +1,4 @@
-"""Pin the two r13 gate-hardening tools.
+"""Pin the two r13 gate-hardening tools and the subset bench CLI.
 
 - tools/mutate_oracle.py: the site collector and the mutator must agree
   on traversal order (a desync would mutate the WRONG site — silently
@@ -9,6 +9,8 @@
   legitimate query never flags) but value/column/count-sensitive (so a
   real divergence always does), and a deterministic query must digest
   identically on the round-robin-rewritten input.
+- tools/subset_bench.py: unknown query names are rejected before the
+  Spark session starts.
 """
 
 import ast
@@ -162,3 +164,25 @@ def test_boundary_probe_scenarios_cover_all_class_a_survivors():
         assert name in probed or name in CLASS_B, (
             f"unadjudicated mutation survivor: {name}"
         )
+
+
+def test_subset_bench_rejects_unknown_names_before_session(monkeypatch, capsys):
+    # an unknown query name must fail fast, naming only the bad names,
+    # before the (slow) Spark session is ever built
+    import pytest
+
+    import labelspark_spark
+    import subset_bench
+
+    def _no_session(*a, **k):
+        raise AssertionError("Spark session built for an invalid query list")
+
+    monkeypatch.setattr(labelspark_spark, "get_spark_session", _no_session)
+    monkeypatch.setattr(
+        sys, "argv", ["subset_bench.py", "kmeans_ivf_recall", "no_such_query"]
+    )
+    with pytest.raises(SystemExit) as exc:
+        subset_bench.main()
+    assert exc.value.code != 0
+    err = capsys.readouterr().err
+    assert "no_such_query" in err and "kmeans_ivf_recall" not in err.split("error:")[-1]

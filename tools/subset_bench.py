@@ -30,8 +30,13 @@ def main() -> None:
     ap.add_argument("--passes", type=int, default=3)
     args = ap.parse_args()
 
-    from labelspark_spark import get_spark_session
     from labelspark_spark.queries import REGISTRY
+
+    unknown = [n for n in args.names if n not in REGISTRY]
+    if unknown:
+        ap.error(f"unknown query names: {', '.join(unknown)}")
+
+    from labelspark_spark import get_spark_session
 
     spark = get_spark_session(app_name="subset-bench")
     spark.range(1).count()
