@@ -1,7 +1,9 @@
 """Deduplication operators (north-star extension; SURVEY §2.9-16).
 
-Five families, all fully distributed — no driver materialization, no
-Python UDFs on the hot path:
+Five families, all fully distributed — no driver materialization, and
+no shuffle just to build a per-document signature (the MinHash and
+SimHash signatures are per-batch NumPy kernels over Arrow lists;
+tokenizing, shingle hashing and the blocking joins run in the JVM):
 
 - exact:        fingerprint (md5 of normalized text) -> keep-first
 - minhash-lsh:  shingle -> minhash signature -> banded buckets ->
@@ -20,10 +22,15 @@ engine-portable, so tests can replay it in Python/DuckDB.
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from labelspark_spark.functions.text import fingerprint, normalize_text, word_shingles
 
@@ -59,6 +66,38 @@ def _perm_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
         b = state % (2**30 - 1)
         params.append((a, b))
     return params
+
+
+def _list_offsets(col: pa.Array) -> np.ndarray:
+    """Row offsets into ``col.flatten()`` of one Arrow list column: row
+    i owns values ``offsets[i]:offsets[i + 1]``. A null row counts as
+    empty (``flatten`` skips whatever backs it)."""
+    lens = pc.fill_null(pc.list_value_length(col), 0).to_numpy()
+    return np.concatenate(([0], np.cumsum(lens, dtype=np.int64)))
+
+
+def _minhash_mins(
+    offsets: np.ndarray, sh: np.ndarray, params: list[tuple[int, int]]
+) -> tuple[np.ndarray, np.ndarray]:
+    """Permutation minima of one batch of hashed shingle lists.
+
+    ``sh`` holds the batch's flattened xxhash64 shingles and ``offsets``
+    its row offsets; row ``i`` of the ``(len(params), rows)`` result is,
+    per document, the minimum of ``(a * (h >>> 32) + b) % MINHASH_PRIME``
+    over its shingles for the ``i``-th ``(a, b)``. Exact in int64:
+    ``a, b < 2^30`` and ``h >>> 32 < 2^32``. One permutation
+    at a time, so the temporaries are O(shingles), not 32x that.
+    ``np.minimum.reduceat`` cannot reduce an empty slice (it returns the
+    element at the start instead), so it runs over the non-empty rows'
+    starts only; the second result marks those rows (an empty row has
+    no minimum)."""
+    h = (sh.view(np.uint64) >> np.uint64(32)).astype(np.int64)
+    filled = offsets[:-1] < offsets[1:]
+    starts = offsets[:-1][filled]
+    mins = np.zeros((len(params), len(filled)), dtype=np.int64)
+    for i, (a, b) in enumerate(params):
+        mins[i, filled] = np.minimum.reduceat((a * h + b) % MINHASH_PRIME, starts)
+    return mins, filled
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -258,6 +297,32 @@ def _jaccard_on_pairs(cand: DataFrame, sh: DataFrame, hashed: bool = False) -> D
     )
 
 
+def _minhash_signatures(sh: DataFrame, num_hashes: int, seed: int) -> DataFrame:
+    """``(_id, _m0 .. _m{num_hashes-1})`` MinHash signatures of a
+    :func:`_hash_shingled` frame, in ONE Arrow pass per batch
+    (:func:`_minhash_mins`) inside the shingling stage: no explode, no
+    shuffle; an explode + groupBy with one MIN aggregate per
+    permutation would cost time linear in the column count, most of
+    :func:`minhash_lsh_pairs`. One output row per input row (ids are
+    unique per document); a document with no shingles gets null mins,
+    and ``_id`` keeps its input type."""
+    params = _perm_params(num_hashes, seed)
+    schema = StructType(
+        [sh.schema["_id"]] + [StructField(f"_m{i}", LongType()) for i in range(num_hashes)]
+    )
+
+    def _mins(batches):
+        for batch in batches:
+            col = batch.column(1)
+            mins, filled = _minhash_mins(_list_offsets(col), col.flatten().to_numpy(), params)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0)] + [pa.array(m, mask=~filled) for m in mins],
+                names=schema.names,
+            )
+
+    return sh.mapInArrow(_mins, schema)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -288,31 +353,15 @@ def minhash_lsh_pairs(
     # sets equals Jaccard over string sets barring a ~2^-64 collision
     # (which exact verification would merely round, never invent a pair).
     sh = _hash_shingled(df, text_col, id_col, shingle_words)
-    params = _perm_params(num_hashes, seed)
-    # Permutation mins via explode + partial-aggregated groupBy, not
-    # array_min HOF lambdas: HOFs run interpreted per element, the agg
-    # is whole-stage-codegen int math (measured ~1.4x). Map-side combine
-    # shrinks the shuffle to one 32-col row per doc before it moves.
-    # The top 32 bits feed the affine perms so a*h+b stays inside long.
-    # (expr strings throughout: the 32-permutation agg + 16 band keys as
-    # Column ops cost ~0.8s of py4j chatter per query CONSTRUCTION —
-    # measured at local[32]; the parsed form builds the identical plan)
-    ex = sh.select(
-        "_id",
-        F.expr("explode_outer(transform(_sh, h -> shiftrightunsigned(h, 32))) AS _h"),
-    )
-    minned = ex.groupBy("_id").agg(
-        *[
-            F.expr(f"min(({a} * _h + {b}) % {MINHASH_PRIME}) AS _m{i}")
-            for i, (a, b) in enumerate(params)
-        ]
-    )
+    minned = _minhash_signatures(sh, num_hashes, seed)
     # One 64-bit key per band (xxhash64 over band index + that band's
     # signature rows) instead of (band:int, key:string): the bucket
     # self-join shuffles/sorts a single bigint — measured ~1.9x faster
     # end-to-end than string band keys at sf0.1. A 2^-64 key collision
     # can only ADD a candidate pair, which exact verification then
-    # filters — never a wrong result.
+    # filters — never a wrong result. (An expr string: the 16 band keys
+    # as Column ops cost py4j chatter per query CONSTRUCTION; the parsed
+    # form builds the identical plan.)
     band_keys = ", ".join(
         "xxhash64({}, {})".format(
             i,
@@ -321,16 +370,16 @@ def minhash_lsh_pairs(
         for i in range(num_bands)
     )
     # explode_outer, NOT explode: InferFiltersFromGenerate would add a
-    # size(arr)>0 filter that predicate-pushdown inlines BELOW the staged
-    # projections, re-evaluating the whole minhash expression tree per row.
-    # The band array is never empty, so outer semantics are identical.
+    # size(arr)>0 filter over the band-key array: per-row work for a
+    # filter that can never drop a row. The band array is never empty,
+    # so outer semantics are identical.
     buckets = minned.select(
         "_id", F.expr(f"explode_outer(array({band_keys})) AS _key")
     )
     left = buckets.select(F.col("_id").alias("id_a"), "_key")
     right = buckets.select(F.col("_id").alias("id_b"), "_key")
     # merge hint: both sides are the same subplan, so sort-merge lets
-    # ReusedExchange compute the 64-perm signature ONCE; broadcast would
+    # ReusedExchange run the signature pass ONCE; broadcast would
     # rebuild it per side (and at 100 TB the bucket table can't broadcast).
     cand = (
         left.join(right.hint("merge"), ["_key"])
@@ -598,53 +647,72 @@ def simhash(col: Column, bits: int = 62, seed: int = 42) -> Column:
     return out
 
 
+def _md5_word32(tokens: list[bytes], suffix: bytes = b"") -> np.ndarray:
+    """:func:`base_hash32` of each ``token + suffix`` in Python: the
+    first 4 md5 bytes, big-endian, as int64."""
+    digests = b"".join(hashlib.md5(t + suffix).digest()[:4] for t in tokens)
+    return np.frombuffer(digests, dtype=">u4").astype(np.int64)
+
+
+def _simhash_rows(tk: pa.Array, bits: int, seed: int) -> np.ndarray:
+    """SimHash of each row of one Arrow batch of token lists.
+
+    Each distinct token of the batch is md5-hashed once (the vocabulary
+    is Zipf-distributed, so far fewer hashes than tokens): ``lo`` is
+    :func:`base_hash32` of the token, ``hi`` that of ``token + "#s<seed>"``;
+    bits 0-30 come from ``lo``, bits 31+ from ``hi``. A row's count of
+    set bit ``b`` is a difference of one cumulative sum over the flat
+    tokens at its offsets, and bit ``b`` of the hash is set iff
+    ``2 * count > n_tokens`` — the majority vote of :func:`simhash`. A
+    null row or one with no tokens hashes to 0."""
+    offsets = _list_offsets(tk)
+    enc = pc.dictionary_encode(tk.flatten())
+    vocab = enc.dictionary.cast(pa.binary()).to_pylist()
+    codes = enc.indices.to_numpy()
+    lo = _md5_word32(vocab)
+    hi = _md5_word32(vocab, f"#s{seed}".encode())
+    n_tok = np.diff(offsets)
+    out = np.zeros(len(n_tok), dtype=np.int64)
+    for b in range(bits):
+        word, shift = (lo, b) if b < 31 else (hi, b - 31)
+        c = np.concatenate(([0], np.cumsum(((word >> shift) & 1)[codes])))
+        out |= (2 * (c[offsets[1:]] - c[offsets[:-1]]) > n_tok).astype(np.int64) << b
+    return out
+
+
 def _simhash_staged(
     df: DataFrame, text_col: str, id_col: str, bits: int = 62, seed: int = 42
 ) -> DataFrame:
-    """SimHash via explode + a 62-sum hash aggregation: returns (_id, _h).
+    """SimHash per document in one Arrow pass per batch: returns
+    ``(_id, _h)``, ``_h`` a non-null bigint.
 
-    The fold form (62 ``F.aggregate`` lambdas over a staged token-hash
-    array) evaluates INTERPRETED — HOF lambdas fall out of whole-stage
-    codegen, and 62 folds x tokens x docs cost ~2s per join side at
-    sf0.1. Exploding tokens instead computes the two md5 hash words
-    once per token in a codegen projection and turns the 62 bit votes
-    into 62 map-side-combinable SUM aggregates — all JVM codegen, and
-    the shuffle is exactly one 62-long partial row per doc (measured
-    with the checkpoint below: dedup_simhash 4.8s -> 2.4s at sf0.1).
-    Votes are identical integer
-    math; zero-token docs survive via explode_outer (their null hash
-    makes every SUM null, every CASE arm 0 -> _h = 0, matching the
-    fold's empty-array result)."""
+    The JVM tokenizes (:func:`whitespace_tokens`); one ``mapInArrow``
+    kernel (:func:`_simhash_rows`) hashes and votes per batch, with no
+    shuffle. Hashes equal the :func:`simhash` column function's (pinned
+    by tests/test_properties.py::test_simhash_explode_form_matches_hof_fold).
+    Both SQL forms are slower: the fold's 62 ``F.aggregate`` lambdas
+    evaluate interpreted per token, and an explode + groupBy with 62
+    SUM vote columns costs time linear in the column count. One
+    output row per input row (ids are unique per document)."""
     from labelspark_spark.functions.text import whitespace_tokens
     from labelspark_spark.sources.readers import spread_to_parallelism
 
-    # spread: tokenize + two md5 hashes per token + the 62-vote partial
-    # aggregation all evaluate in the SCAN stage, which is one task on
-    # the single-row-group sf parquet (r13 optimization round; measured
-    # ~0.8s off dedup_simhash at sf0.1).
+    # spread: tokenizing and the hash kernel would otherwise run in the
+    # scan stage, which is one task on the single-row-group sf parquet;
+    # on inputs with enough splits it adds nothing to the plan.
     tok = spread_to_parallelism(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("_id"),
-        F.explode_outer(whitespace_tokens(F.col(text_col))).alias("_t"),
+        F.col(id_col).alias("_id"), whitespace_tokens(F.col(text_col)).alias("_tk")
     )
-    hashed = tok.select(
-        "_id",
-        base_hash32(F.col("_t")).alias("_lo"),
-        base_hash32(F.concat(F.col("_t"), F.lit(f"#s{seed}"))).alias("_hi"),
-    )
-    votes = hashed.groupBy("_id").agg(
-        *[
-            F.sum(
-                (F.shiftright(F.col("_lo" if b < 31 else "_hi"), b if b < 31 else b - 31) % 2)
-                * 2
-                - 1
-            ).alias(f"_v{b}")
-            for b in range(bits)
-        ]
-    )
-    out = F.lit(0).cast("bigint")
-    for b in range(bits):
-        out = out + F.when(F.col(f"_v{b}") > 0, F.lit(2**b).cast("bigint")).otherwise(F.lit(0))
-    return votes.select("_id", out.alias("_h"))
+    schema = StructType([tok.schema["_id"], StructField("_h", LongType(), nullable=False)])
+
+    def _hash(batches):
+        for batch in batches:
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.array(_simhash_rows(batch.column(1), bits, seed))],
+                names=schema.names,
+            )
+
+    return tok.mapInArrow(_hash, schema)
 
 
 def hamming64(a: Column, b: Column) -> Column:
@@ -668,21 +736,16 @@ def simhash_pairs(
     (pigeonhole), so candidates come from a band-key equi-join.
     Returns (id_a, id_b, hamming).
     """
-    # one eager localCheckpoint: the band self-join consumes the hash
-    # frame on BOTH sides and plan canonicalization does not give this
-    # shape a ReusedExchange (measured: the 62-vote aggregation ran
-    # twice). The materialized frame is (id, bigint) — 16 bytes per doc,
-    # bounded at any corpus scale.
-    hashed = _simhash_staged(df, text_col, id_col, bits, seed).localCheckpoint(
-        eager=True
-    )
+    # no checkpoint needed: the band self-join's two sides are one
+    # subplan, so ReusedExchange runs the hash pass once (a checkpoint
+    # would only add a job, ~0.2 s per call on sf0.01 documents)
+    hashed = _simhash_staged(df, text_col, id_col, bits, seed)
     band_width = bits // num_bands
     bands = hashed.select(
         "_id",
         "_h",
-        # explode_outer: see minhash_lsh_pairs — keeps the inferred
-        # size>0 filter from inlining the 62-vote simhash tree below
-        # the staged projections. Band array always has num_bands rows.
+        # explode_outer: see minhash_lsh_pairs — no inferred size>0
+        # filter. Band array always has num_bands rows.
         F.explode_outer(
             F.array(
                 *[
@@ -701,7 +764,7 @@ def simhash_pairs(
     b = bands.select(F.col("_id").alias("id_b"), F.col("_h").alias("h_b"), "_band", "_key")
     return (
         # merge hint: see minhash_lsh_pairs — ReusedExchange computes the
-        # 62-bit vote projection once instead of per join side.
+        # band projection once instead of per join side.
         a.join(b.hint("merge"), ["_band", "_key"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", hamming64(F.col("h_a"), F.col("h_b")).alias("hamming"))

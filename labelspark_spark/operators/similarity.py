@@ -229,11 +229,9 @@ def kmeans_fit(
        centroid per row, so the count never exceeds k but can land
        under it on degenerate splits.
 
-    Two physical plans compute the same centroids bit-for-bit for
-    k <= 4096 (pinned by
-    tests/test_approx_recall.py::test_kmeans_fit_fused_matches_loop;
-    above that the staged coarse fit is itself two-level), and the
-    input's split count picks one: a single-partition input
+    Two physical plans compute the same centroids bit-for-bit (pinned
+    by tests/test_approx_recall.py::test_kmeans_fit_fused_matches_loop),
+    and the input's split count picks one: a single-partition input
     (every single-row-group sf scan) runs the whole fit as one Arrow
     task (:func:`_fit_one_task`), because the staged form there is a
     chain of serial one-task jobs, each paying the ~0.2s Python-stage
@@ -424,13 +422,12 @@ def _fit_one_task(src: DataFrame, k: int, max_iters: int, seed: int) -> DataFram
 
 def _fit_staged(src: DataFrame, k: int, max_iters: int, seed: int) -> DataFrame:
     """The distributed fit over ``src`` (columns ``_id``, ``_v``), for
-    many-split scans. Flat: a JVM ``orderBy(...).limit(k)`` init, then
-    one ``mapInPandas`` job per iteration that assigns and partial-sums
-    in the same pass — one (count, sum-vector) row per centroid per
-    partition reaches the driver, k*dim doubles per partition.
-    Two-level: the coarse fit (this function at ``k1``), a nearest-cell
-    assignment pass, then one ``groupBy().applyInPandas`` local fit per
-    coarse cell, all cells in parallel.
+    many-split scans. Flat (:func:`_fit_staged_flat`) up to
+    :data:`_FLAT_K_MAX`; past it, two-level: a flat coarse fit at
+    ``k1``, a nearest-cell assignment pass, then one
+    ``groupBy().applyInPandas`` local fit per coarse cell, all cells in
+    parallel. The coarse level is flat at every ``k``, as in
+    :func:`_fit_one_task`.
 
     Memory contract of the two-level form: ``applyInPandas`` loads ONE
     coarse cell per executor pandas frame, ~n/k1 rows * dim doubles for
@@ -438,37 +435,10 @@ def _fit_staged(src: DataFrame, k: int, max_iters: int, seed: int) -> DataFrame:
     near-identical corpus) can dump most rows into one cell and OOM
     that executor; cap cell size upstream (salt oversized cells on a
     hash of the id) if the corpus may degenerate."""
-    spark = src.sparkSession
     if k <= _FLAT_K_MAX:
-        init = (
-            src.orderBy(F.xxhash64(F.col("_id"), F.lit(seed)), F.col("_id"))
-            .limit(k)
-            .select(F.col("_v").cast("array<double>").alias("centroid"))
-            .collect()
-        )
-        vecs = src.select("_v")
-
-        def _partials(cents):
-            def _part(batches):
-                cnt, sums = _lloyd_partials(
-                    (_as_matrix(pdf["_v"]) for pdf in batches if len(pdf)), cents
-                )
-                yield pd.DataFrame(
-                    {"cid": np.arange(len(cents), dtype=np.int64), "cnt": cnt, "s": list(sums)}
-                )
-
-            cnt = np.zeros(len(cents), dtype=np.int64)
-            sums = np.zeros_like(cents)
-            for r in vecs.mapInPandas(_part, "cid bigint, cnt bigint, s array<double>").collect():
-                cnt[r.cid] += r.cnt
-                sums[r.cid] += np.asarray(r.s, dtype=np.float64)
-            return cnt, sums
-
-        cents = _lloyd([list(r.centroid) for r in init], max_iters, _partials)
-        return spark.createDataFrame(list(enumerate(cents)), _CENTROIDS_SCHEMA)
-
+        return _fit_staged_flat(src, k, max_iters, seed)
     k1 = _coarse_k(k)
-    coarse = _fit_staged(src, k1, max_iters, seed)
+    coarse = _fit_staged_flat(src, k1, max_iters, seed)
     cent = coarse.select(F.col("centroid_id").alias("_cid"), F.col("centroid").alias("_cvec"))
     assigned = _assign_to_centroids(src, cent, "_id", "_v", 1, "_id", decimals=9)
 
@@ -479,7 +449,40 @@ def _fit_staged(src: DataFrame, k: int, max_iters: int, seed: int) -> DataFrame:
         )
 
     cells = assigned.groupBy("_cid").applyInPandas(_local, _CELL_CENTROIDS_SCHEMA)
-    return _centroid_frame(spark, cells.collect())
+    return _centroid_frame(src.sparkSession, cells.collect())
+
+
+def _fit_staged_flat(src: DataFrame, k: int, max_iters: int, seed: int) -> DataFrame:
+    """Flat staged fit: a JVM ``orderBy(...).limit(k)`` init, then one
+    ``mapInPandas`` job per iteration that assigns and partial-sums in
+    the same pass — one (count, sum-vector) row per centroid per
+    partition reaches the driver, k*dim doubles per partition."""
+    init = (
+        src.orderBy(F.xxhash64(F.col("_id"), F.lit(seed)), F.col("_id"))
+        .limit(k)
+        .select(F.col("_v").cast("array<double>").alias("centroid"))
+        .collect()
+    )
+    vecs = src.select("_v")
+
+    def _partials(cents):
+        def _part(batches):
+            cnt, sums = _lloyd_partials(
+                (_as_matrix(pdf["_v"]) for pdf in batches if len(pdf)), cents
+            )
+            yield pd.DataFrame(
+                {"cid": np.arange(len(cents), dtype=np.int64), "cnt": cnt, "s": list(sums)}
+            )
+
+        cnt = np.zeros(len(cents), dtype=np.int64)
+        sums = np.zeros_like(cents)
+        for r in vecs.mapInPandas(_part, "cid bigint, cnt bigint, s array<double>").collect():
+            cnt[r.cid] += r.cnt
+            sums[r.cid] += np.asarray(r.s, dtype=np.float64)
+        return cnt, sums
+
+    cents = _lloyd([list(r.centroid) for r in init], max_iters, _partials)
+    return src.sparkSession.createDataFrame(list(enumerate(cents)), _CENTROIDS_SCHEMA)
 
 
 def _nearest_cells_udf(cids: "np.ndarray", cents: "np.ndarray", n: int, decimals: int):

@@ -38,6 +38,32 @@ def test_minhash_lsh_recall_vs_exact(spark):
         assert r.jaccard >= 0.5
 
 
+def test_dedup_pair_schemas_pinned(spark):
+    # the signature kernels are mapInArrow passes, whose declared schema
+    # sets every output column's nullability: the pair frames must keep
+    # the types and nullability of their SQL-aggregate predecessors
+    # (hamming non-null, ids as read from the documents table)
+    from pyspark.sql.types import (
+        DoubleType,
+        IntegerType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    docs = _docs(spark)
+    ids = [StructField("id_a", LongType(), True), StructField("id_b", LongType(), True)]
+    assert dedup.simhash_pairs(docs).schema == StructType(
+        ids + [StructField("hamming", IntegerType(), False)]
+    )
+    assert dedup.minhash_lsh_pairs(docs).schema == StructType(
+        ids + [StructField("jaccard", DoubleType(), True)]
+    )
+    assert dedup._simhash_staged(docs, "text", "doc_id").schema == StructType(
+        [StructField("_id", LongType(), True), StructField("_h", LongType(), False)]
+    )
+
+
 def test_null_text_rows_never_pair(spark):
     # xxhash64 skips NULL args, so un-filtered null-text rows would all
     # hash to the seed constant and pair with each other at jaccard 1.0;
@@ -251,12 +277,13 @@ def test_kmeans_fit_fused_matches_loop(spark):
     # quantized argmax, empty-cluster keep and early break. Exercise
     # several (k, iters) shapes including max_iters=0 (init only), a
     # k>n row-deficit, and k > 64 (one-task two-level fit vs the staged
-    # coarse+assign+locals path).
+    # coarse+assign+locals path), up to k = 4225, whose coarse level
+    # k1 = 65 is itself past the flat limit (both plans fit it flat).
     emb = read_table(spark, SF_CORRECT, "embeddings")
     assert emb.rdd.getNumPartitions() == 1, "fixture must be single-partition"
     src = emb.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
     key = lambda r: r.centroid_id  # noqa: E731
-    for k, iters in ((4, 3), (16, 3), (8, 0), (9, 5), (72, 3), (81, 2)):
+    for k, iters in ((4, 3), (16, 3), (8, 0), (9, 5), (72, 3), (81, 2), (4225, 2)):
         fused = similarity._fit_one_task(src, k, iters, 42).collect()
         loop = similarity._fit_staged(src, k, iters, 42).collect()
         assert [(r.centroid_id, tuple(r.centroid)) for r in sorted(fused, key=key)] == [

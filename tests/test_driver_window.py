@@ -187,6 +187,22 @@ R13_CHANGED_NOT_IN_HEAD.update(
         for name in ["dedup_embedding_lsh", "dedup_embedding_lsh_recall", "similarity_ivf"]
     }
 )
+# MinHash/SimHash signatures as per-batch mapInArrow kernels (the
+# explode + groupBy MIN/SUM aggregations are gone) and the flat coarse
+# level of the staged two-level k-means fit. Pair outputs and schemas
+# are bit-identical to the previous tree at sf0.001, sf0.01 and sf0.1;
+# the oracle replay of the 15 queries tools/changed_head.py flags is
+# green at sf0.01 (9 hash-green + 6 rows-only, 0 failures). Only the
+# names below were not already listed above.
+R13_CHANGED_NOT_IN_HEAD.update(
+    {
+        name: (
+            "dedup signature kernels: bit-identical pair outputs, flagged-"
+            "query oracle replay green at sf0.01; next head candidate"
+        )
+        for name in ["dedup_minhash_lsh", "dedup_minhash_recall"]
+    }
+)
 
 # the frozen declared-approximate set (VERDICT r10: 12 rows-only
 # entries, every one carrying a driver-green hash-checked companion)

@@ -6,6 +6,8 @@ example is a Spark job; the lists inside each example carry the variety.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pyspark.sql.functions as F
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -387,11 +389,27 @@ def test_triangle_orientation_matches_brute_force_on_random_graphs(spark):
         ), f"seed={seed}: got {row}, want ({expected_nodes},{len(edges)},{expected_tri})"
 
 
+@contextmanager
+def _arrow_batch_rows(spark, rows):
+    """Scope spark.sql.execution.arrow.maxRecordsPerBatch, so Arrow
+    kernels see batch boundaries inside a small frame."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(rows))
+    try:
+        yield
+    finally:
+        spark.conf.set(conf, old)
+
+
 def test_simhash_explode_form_matches_hof_fold(spark):
-    """The r8 explode+codegen simhash (_simhash_staged) and the
-    original HOF-fold column function (simhash) are two physical forms
-    of one definition — per-doc hashes must be equal on texts covering
-    empty, single-token, duplicate-token, and long-mixed cases."""
+    """The Arrow-kernel simhash (_simhash_staged) and the original
+    HOF-fold column function (simhash) are two physical forms of one
+    definition — per-doc hashes must be equal (null-safe, one row per
+    doc) on texts covering null, empty, whitespace-only, single-token,
+    duplicate-token, multi-byte UTF-8 and long-mixed cases, on a frame
+    where no doc has a token, and on an empty frame. A 7-row Arrow
+    batch size puts batch boundaries inside every frame."""
     from pyspark.sql import functions as F
 
     from labelspark_spark.operators import dedup
@@ -400,10 +418,60 @@ def test_simhash_explode_form_matches_hof_fold(spark):
         "", "one", "a a a a", "the quick brown fox jumps over the lazy dog",
         "x " * 40, "alpha beta gamma delta epsilon zeta eta theta",
         "repeat repeat repeat unique", "  leading and   inner   spaces  ",
+        None, "   ", "\t\n  \r", "héllo wörld ünïcode", "日本語 の テキスト 日本語",
+        "emoji 😀 😀 party ❄", None,
     ] + [f"doc {i} token{i % 7} filler word{i % 3} end" for i in range(30)]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id int, text string")
-    fold = df.select("doc_id", dedup.simhash(F.col("text")).alias("h_fold"))
-    staged = dedup._simhash_staged(df, "text", "doc_id").withColumnRenamed("_h", "h_staged")
-    joined = fold.join(staged, fold.doc_id == staged._id)
-    bad = joined.filter(F.col("h_fold") != F.col("h_staged")).count()
-    assert bad == 0
+    no_tokens = [None, "", " ", "\t", "  \n  ", None, "", "   "]
+    with _arrow_batch_rows(spark, 7):
+        for rows in (texts, no_tokens, []):
+            df = spark.createDataFrame(list(enumerate(rows)), "doc_id int, text string")
+            fold = df.select("doc_id", dedup.simhash(F.col("text")).alias("h_fold"))
+            staged = dedup._simhash_staged(df, "text", "doc_id").withColumnRenamed("_h", "h_staged")
+            joined = fold.join(staged, fold.doc_id == staged._id).collect()
+            assert len(joined) == len(rows)
+            assert all(r.h_fold == r.h_staged for r in joined)
+            if rows is no_tokens:
+                assert {r.h_staged for r in joined} == {0}
+
+
+def test_minhash_mins_kernel_matches_sql_min(spark):
+    """The Arrow-kernel MinHash signature (_minhash_signatures) equals
+    the SQL form it replaced — explode_outer + groupBy with one
+    min((a*h+b) % p) per permutation, written out here as the
+    reference — over the same _hash_shingled frame, plus rows whose
+    shingle list is empty or null (null mins on both sides), across
+    7-row Arrow batches, and on an empty frame."""
+    from pyspark.sql import functions as F
+
+    from labelspark_spark.operators import dedup
+
+    texts = [
+        "one", "a a a a", "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox jumps over the lazy dog today", "", "   ",
+        "héllo wörld ünïcode ☃ 雪 ❄", "x " * 40, "two words", None,
+    ] + [f"doc {i} token{i % 7} filler word{i % 3} end" for i in range(20)]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
+    sh = dedup._hash_shingled(docs, "text", "doc_id", 3).unionByName(
+        spark.createDataFrame([(1000, []), (1001, None)], "_id bigint, _sh array<bigint>")
+    )
+    params = dedup._perm_params(32, 42)
+
+    def reference(frame):
+        ex = frame.select(
+            "_id",
+            F.expr("explode_outer(transform(_sh, h -> shiftrightunsigned(h, 32))) AS _h"),
+        )
+        return ex.groupBy("_id").agg(
+            *[
+                F.expr(f"min(({a} * _h + {b}) % {dedup.MINHASH_PRIME}) AS _m{i}")
+                for i, (a, b) in enumerate(params)
+            ]
+        )
+
+    with _arrow_batch_rows(spark, 7):
+        got = dedup._minhash_signatures(sh, 32, 42).collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, reference(sh).collect()))
+        assert dedup._minhash_signatures(sh.limit(0), 32, 42).collect() == []
+    by_id = {r[0]: r[1:] for r in got}
+    assert by_id[1000] == by_id[1001] == (None,) * 32
+    assert all(v is not None for i, m in by_id.items() if i < 1000 for v in m)
